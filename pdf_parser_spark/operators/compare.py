@@ -5,11 +5,14 @@ variants over the same input and return one keyed result set — here a
 union of the variant outputs tagged with ``extractor_name`` (the Spark
 idiom for the reference's dict-of-results).
 
-D6 (/root/reference/tests/extractor_config.py:33-96): the registry mapping
-inputs to extractor implementations. In this engine dispatch happens on
-the ``tool`` column inside the extraction UDF (page/v1 -> layout parser,
-html/v1 -> boilerplate stripper, else plain fallback); this module holds
-the variant registry for the layout parser itself.
+D6 (the reference's tests/extractor_config.py:33-96): the registry mapping
+inputs to extractor implementations. In this engine the dispatch on the
+``tool`` column is declared once, by the per-turn oracle
+``oracle.extractor.extract_turn`` (page/v1 -> layout parser, html/v1 ->
+boilerplate stripper, anything else, null included -> plain fallback); the
+vectorized core in ``operators/extract.py`` splits each batch the same way
+and is tested against it. This module holds the variant registry for the
+layout parser itself.
 """
 
 from __future__ import annotations

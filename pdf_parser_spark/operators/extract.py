@@ -2,12 +2,19 @@
 Arrow-batched pandas core + a Spark ``mapInPandas`` operator.
 
 The per-turn algorithm (tokenize -> separator -> classify -> reassemble ->
-metadata; /root/reference/A003_colored_footer.py:282-326) is re-expressed
+metadata; the reference's A003_colored_footer.py:282-326) is re-expressed
 over *all turns of an Arrow batch at once* with pandas/NumPy column
 operations — no per-row Python in the hot path (BASELINE.json:input_hint).
 Semantics are defined by the single-process oracle
-(pdf_parser_spark/oracle/extractor.py); ``tests/test_extract_golden.py``
-asserts vectorized == oracle on every fixture archetype.
+``oracle.extractor.extract_turn``, the one per-turn dispatch for every
+tool (page/v1, html/v1, plain; null and unknown tools are plain).
+
+One batch path: ``_extract_core`` (unguarded, ``{variant: layout frame}``)
+runs inside ``_batch_layouts``, which holds the only oracle fallback;
+``extract_batch`` and ``extract_batch_multi`` are thin wrappers over it.
+``tests/test_vectorized_core.py`` and ``tests/test_fuzz.py`` check the core
+against the oracle with that fallback switched off, so a raising core fails
+them; ``tests/test_extract_golden.py`` checks the Spark operator.
 
 Scale design:
 
@@ -15,22 +22,25 @@ Scale design:
   for the map phase, so mega-conversation skew cannot serialize it
 * the only Python<->JVM boundary is Arrow batch transport (mapInPandas)
 * per-turn error handling degrades to error rows, never fails the task
-  (D1 semantics, A003:328-341); if the vectorized path itself raises on a
+  (D1 semantics, A003:328-341); if the core itself raises on a
   pathological batch, the batch falls back to the per-turn oracle (slow but
-  identical semantics), preserving degrade-don't-fail at batch granularity
+  identical semantics) and a warning naming the exception is logged,
+  preserving degrade-don't-fail at batch granularity
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import re
 
 import numpy as np
 import pandas as pd
 
-from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.oracle.extractor import VARIANTS, extract_turn
-from pdf_parser_spark.payload import unescape_text
+from pdf_parser_spark.payload import A000_KEEP_TYPES, stub_block_type, unescape_text
+
+_log = logging.getLogger(__name__)
 
 PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
 LAYOUT_FIELDS = [
@@ -45,9 +55,6 @@ LAYOUT_SCHEMA_DDL = (
     "page_width double, page_height double, "
     "column_separator_position double, metadata map<string,string>"
 )
-
-DEFAULT_PAGE_W = 612.0
-DEFAULT_PAGE_H = 792.0
 
 # Record grammar shared with the oracle parser (payload.py) — both sides
 # accept exactly the same strict language, so tokenize-failure semantics
@@ -69,20 +76,10 @@ def _unescape_series(s: pd.Series) -> pd.Series:
 
 
 def _empty_layout_frame() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "rid": pd.Series([], dtype=np.int64),
-            "page_number": pd.Series([], dtype=np.int64),
-            "header": pd.Series([], dtype=object),
-            "footer": pd.Series([], dtype=object),
-            "left_column": pd.Series([], dtype=object),
-            "right_column": pd.Series([], dtype=object),
-            "page_width": pd.Series([], dtype=np.float64),
-            "page_height": pd.Series([], dtype=np.float64),
-            "column_separator_position": pd.Series([], dtype=np.float64),
-            "metadata": pd.Series([], dtype=object),
-        }
-    )
+    dtypes = {"rid": np.int64, "page_number": np.int64, "page_width": np.float64,
+              "page_height": np.float64, "column_separator_position": np.float64}
+    return pd.DataFrame({
+        c: pd.Series([], dtype=dtypes.get(c, object)) for c in ["rid"] + LAYOUT_FIELDS})
 
 
 def _error_frame(rids: np.ndarray, turn_idx: pd.Series, messages) -> pd.DataFrame:
@@ -626,8 +623,6 @@ def _classify_stage_a000(state: dict) -> pd.DataFrame:
     the stub-assigned types: Table/Figure blocks never reach separator
     search, classification or the block counts (a local filtered copy —
     ``state`` is shared with the other variants in the fused fan-out)."""
-    from pdf_parser_spark.payload import A000_KEEP_TYPES, stub_block_type
-
     rows = state["rows"]
     blocks = state["blocks"]
     if len(blocks):
@@ -751,158 +746,111 @@ def _classify_stage_a000(state: dict) -> pd.DataFrame:
         region_counts, build_metadata)
 
 
-def _extract_page_rows(rows: pd.DataFrame, variant: str) -> pd.DataFrame:
-    """Vectorized A003-family extraction for tool='page/v1' rows.
-
-    ``rows``: columns rid (batch-local int64), turn_idx, text.
-    Returns one layout row per rid.
-    """
-    state, out_parts = _tokenize_stage(rows)
-    if state is not None:
-        out_parts = out_parts + [_classify_stage(state, variant)]
-    if not out_parts:
-        return _empty_layout_frame()
-    return pd.concat(out_parts, ignore_index=True)
-
-
-def _extract_page_rows_multi(rows: pd.DataFrame, variants) -> dict:
-    """One tokenize, N classifications: variant -> layout frame.
-
-    The D4 comparison fan-out previously re-tokenized identical payloads
-    once per variant; the span-tree parse is variant-independent
-    (/root/reference/pdf_layout_tester.py:325-365 runs extractors on the
-    same already-opened pages), so only ``_classify_stage`` repeats."""
-    state, out_parts = _tokenize_stage(rows)
-    result = {}
-    for v in variants:
-        parts = list(out_parts)
-        if state is not None:
-            parts.append(_classify_stage(state, v))
-        result[v] = (
-            pd.concat(parts, ignore_index=True) if parts else _empty_layout_frame()
-        )
-    return result
-
-
-_PAGE_RECT_JSON = json.dumps([0.0, 0.0, DEFAULT_PAGE_W, DEFAULT_PAGE_H])
-_META_PLAIN_BLOCK = {
-    "total_text_blocks": "1", "header_blocks": "0", "footer_blocks": "0",
-    "left_column_blocks": "0", "right_column_blocks": "1",
-    "vertical_lines_detected": "0", "colored_footer_regions": "0",
-    "has_footer": "false", "page_rect": _PAGE_RECT_JSON,
-}
-_META_PLAIN_EMPTY = {
-    "total_text_blocks": "0", "header_blocks": "0", "footer_blocks": "0",
-    "left_column_blocks": "0", "right_column_blocks": "0",
-    "vertical_lines_detected": "0", "colored_footer_regions": "0",
-    "has_footer": "false", "page_rect": _PAGE_RECT_JSON,
-}
-_META_NULL_PAYLOAD = {"error": json.dumps("null payload")}
-# A000's metadata keys for the same plain-fallback geometry (separator,
-# classification and text are identical — n=1 block can never satisfy the
-# 10%-each-side grid test, so the separator stays w/2 for both families)
-_META_PLAIN_BLOCK_A000 = {
-    "total_text_blocks_layoutlm": "1", "header_blocks": "0",
-    "footer_blocks": "0", "left_column_blocks": "0",
-    "right_column_blocks": "1", "vertical_lines_detected_count": "0",
-    "page_rect": _PAGE_RECT_JSON,
-    "header_y_boundary": "null", "footer_y_boundary": "null",
-}
-_META_PLAIN_EMPTY_A000 = {
-    "total_text_blocks_layoutlm": "0", "header_blocks": "0",
-    "footer_blocks": "0", "left_column_blocks": "0",
-    "right_column_blocks": "0", "vertical_lines_detected_count": "0",
-    "page_rect": _PAGE_RECT_JSON,
-    "header_y_boundary": "null", "footer_y_boundary": "null",
-}
-
-
 def _extract_plain_rows(rows: pd.DataFrame, variant: str = "a003") -> pd.DataFrame:
-    """tool='plain' (and unknown tools): the reference's get_text() fallback
-    semantics — one whole-page block on a default 612x792 page
-    (A003:94-108). Note the faithful quirk: the block's center_x equals the
-    default separator w/2, and the classifier's strict `<` routes the text
-    to right_column (A003:239-242). Fully vectorized; the possible
-    metadata dicts are shared constants (read-only downstream) — the a000
-    variant differs ONLY in its metadata key set."""
-    if rows.empty:
+    """tool='plain' (null and unknown tools too): the reference's get_text()
+    fallback semantics — one whole-page block on a default 612x792 page
+    (A003:94-108). Per variant, a plain turn is one of three rows that
+    differ only in page number and text: a null payload (D1 error row), an
+    empty page, or one block, whose text the classifier's strict `<`
+    routes to right_column (its center_x is the default separator w/2,
+    A003:239-242). Those three rows come from the oracle, once per batch;
+    a000's P8 stub filter (A000:80-82) can drop the block."""
+    text = rows["text"]
+    stripped = text.fillna("").str.strip()
+    has_block = (stripped != "").to_numpy()
+    if VARIANTS[variant].footer_mode == "line_extent":
+        has_block &= stripped.map(stub_block_type).isin(A000_KEEP_TYPES).to_numpy()
+    kind = np.where(text.isna().to_numpy(), 0, np.where(has_block, 2, 1))
+    block_text = stripped[has_block].iloc[0] if has_block.any() else ""
+    protos = [extract_turn(p, "plain", 0, variant) for p in (None, "", block_text)]
+    out = _layout_frame(protos).iloc[kind].reset_index(drop=True)
+    out.insert(0, "rid", rows["rid"].to_numpy())
+    out["page_number"] = rows["turn_idx"].to_numpy() + 1
+    out["right_column"] = np.where(has_block, stripped, "")
+    return out
+
+
+def _layout_frame(layouts: list) -> pd.DataFrame:
+    """Oracle layout dicts as a frame; the oracle's None separator becomes
+    NaN, so an all-None column cannot turn a later concat's dtype."""
+    frame = pd.DataFrame.from_records(layouts, columns=LAYOUT_FIELDS)
+    frame["column_separator_position"] = frame["column_separator_position"].astype(np.float64)
+    return frame
+
+
+def _oracle_rows(rows: pd.DataFrame, variant: str = "a003") -> pd.DataFrame:
+    """The per-turn oracle ``extract_turn`` mapped over ``rows`` (rid,
+    turn_idx, text, tool), as a layout frame."""
+    layouts = _layout_frame([
+        extract_turn(text, tool, int(turn_idx), variant)
+        for turn_idx, text, tool in rows[["turn_idx", "text", "tool"]].itertuples(index=False)])
+    layouts.insert(0, "rid", rows["rid"].to_numpy())
+    return layouts
+
+
+def _concat_layouts(parts: list) -> pd.DataFrame:
+    """One layout frame from the non-empty ``parts`` (empty ones would
+    decide dtypes), with page numbers int64 whichever tools a batch holds:
+    page and plain parts carry the input's int32 turn index."""
+    parts = [p for p in parts if len(p)]
+    if not parts:
         return _empty_layout_frame()
-    a000 = VARIANTS[variant].footer_mode == "line_extent"
-    n = len(rows)
-    txt = rows["text"]
-    is_null = txt.isna().to_numpy()
-    stripped = txt.fillna("").str.strip()
-    has_block = (~is_null) & (stripped != "").to_numpy()
-    meta = np.empty(n, dtype=object)
-    meta[:] = _META_PLAIN_EMPTY_A000 if a000 else _META_PLAIN_EMPTY
-    meta[has_block] = _META_PLAIN_BLOCK_A000 if a000 else _META_PLAIN_BLOCK
-    meta[is_null] = _META_NULL_PAYLOAD
-    return pd.DataFrame(
-        {
-            "rid": rows["rid"].to_numpy(),
-            "page_number": rows["turn_idx"].to_numpy() + 1,
-            "header": [""] * n,
-            "footer": [""] * n,
-            "left_column": [""] * n,
-            "right_column": np.where(has_block, stripped, ""),
-            "page_width": np.where(is_null, 0.0, DEFAULT_PAGE_W),
-            "page_height": np.where(is_null, 0.0, DEFAULT_PAGE_H),
-            "column_separator_position": np.where(
-                is_null, np.nan, DEFAULT_PAGE_W / 2),
-            "metadata": meta,
-        }
-    )
+    out = pd.concat(parts, ignore_index=True)
+    out["page_number"] = out["page_number"].astype(np.int64)
+    return out
 
 
-def _rows_from_oracle(pairs) -> pd.DataFrame:
-    recs = []
-    for rid, lay in pairs:
-        rec = {"rid": rid}
-        rec.update(lay)
-        sep = rec["column_separator_position"]
-        rec["column_separator_position"] = np.nan if sep is None else sep
-        recs.append(rec)
-    return pd.DataFrame(recs, columns=["rid"] + LAYOUT_FIELDS)
+def _extract_core(pdf: pd.DataFrame, variants) -> dict:
+    """The vectorized core, unguarded: ``{variant: layout frame}`` for a
+    batch with a ``rid`` column. Page payloads are tokenized once and
+    classified per variant (the reference's comparison runs every
+    extractor on the same opened pages, pdf_layout_tester.py:325-365);
+    html rows do not depend on the variant and are computed once; plain
+    rows (null and unknown tools too) carry variant-keyed metadata and
+    are built per variant."""
+    cols = ["rid", "turn_idx", "text", "tool"]
+    is_page = (pdf["tool"] == "page/v1").to_numpy()
+    is_html = (pdf["tool"] == "html/v1").to_numpy()
+    state, page_errors = _tokenize_stage(pdf.loc[is_page, cols])
+    html = [_oracle_rows(pdf.loc[is_html, cols])] if is_html.any() else []
+    plain = pdf.loc[~(is_page | is_html), cols]
+    return {
+        v: _concat_layouts(
+            page_errors
+            + ([] if state is None else [_classify_stage(state, v)])
+            + html
+            + ([_extract_plain_rows(plain, v)] if len(plain) else []))
+        for v in variants
+    }
 
 
-def _extract_html_rows(rows: pd.DataFrame) -> pd.DataFrame:
-    """tool='html/v1': DOM boilerplate stripping (north-rule addition).
+def _batch_layouts(pdf: pd.DataFrame, variants) -> tuple:
+    """``(pdf with rid, {variant: layout frame})`` for one batch: the core,
+    guarded by the only oracle fallback."""
+    pdf = pdf.reset_index(drop=True)
+    pdf["rid"] = np.arange(len(pdf), dtype=np.int64)
+    try:
+        return pdf, _extract_core(pdf, variants)
+    except Exception as exc:  # noqa: BLE001 — batch-level degrade
+        return pdf, _oracle_fallback(pdf, variants, exc)
 
-    The stack-based tokenizer is irreducibly sequential per payload; it runs
-    per turn (not per block-row) inside the Arrow batch, mirroring how
-    pandas str ops iterate internally."""
-    if rows.empty:
-        return _empty_layout_frame()
-    recs = []
-    for rid, turn_idx, text in rows[["rid", "turn_idx", "text"]].itertuples(index=False):
-        try:
-            res = strip_boilerplate(text)
-            recs.append(
-                {
-                    "rid": rid,
-                    "page_number": int(turn_idx) + 1,
-                    "header": res["header"],
-                    "footer": res["footer"],
-                    "left_column": res["left_column"],
-                    "right_column": res["right_column"],
-                    "page_width": 0.0,
-                    "page_height": 0.0,
-                    "column_separator_position": np.nan,
-                    "metadata": res["metadata"],
-                }
-            )
-        except Exception as exc:  # noqa: BLE001 — degrade per turn
-            recs.append(
-                {
-                    "rid": rid,
-                    "page_number": int(turn_idx) + 1,
-                    "header": "", "footer": "", "left_column": "", "right_column": "",
-                    "page_width": 0.0, "page_height": 0.0,
-                    "column_separator_position": np.nan,
-                    "metadata": {"error": json.dumps(str(exc), ensure_ascii=False)},
-                }
-            )
-    return pd.DataFrame(recs, columns=["rid"] + LAYOUT_FIELDS)
+
+def _oracle_fallback(pdf: pd.DataFrame, variants, exc: Exception) -> dict:
+    """The core raised on a pathological batch: re-extract every turn with
+    the per-turn oracle (slow, same semantics) and log one warning naming
+    the exception, so the degrade shows in the worker log."""
+    _log.warning(
+        "vectorized extraction raised %s: %s; %d-turn batch degraded to the "
+        "per-turn oracle", type(exc).__name__, exc, len(pdf), exc_info=exc)
+    return {v: _concat_layouts([_oracle_rows(pdf, v)]) for v in variants}
+
+
+def _with_passthrough(pdf: pd.DataFrame, layouts: pd.DataFrame,
+                      columns: list | None = None) -> pd.DataFrame:
+    """Join ``layouts`` to the batch's passthrough columns, in input order."""
+    merged = pdf.drop(columns=["text"]).merge(layouts, on="rid").sort_values("rid")
+    cols = columns or ([c for c in PASSTHROUGH if c in merged.columns] + LAYOUT_FIELDS)
+    return merged[cols].reset_index(drop=True)
 
 
 def extract_batch(pdf: pd.DataFrame, variant: str = "a003",
@@ -913,51 +861,8 @@ def extract_batch(pdf: pd.DataFrame, variant: str = "a003",
     Output: passthrough + LAYOUT_FIELDS, in input row order; ``columns``
     restricts the output (manual pruning — see ``extract_layouts``).
     """
-    pdf = pdf.reset_index(drop=True)
-    pdf["rid"] = np.arange(len(pdf), dtype=np.int64)
-    tool = pdf["tool"].fillna("plain")
-
-    try:
-        parts = []
-        parts.append(_extract_page_rows(pdf[tool == "page/v1"][["rid", "turn_idx", "text"]], variant))
-        parts.append(_extract_html_rows(pdf[tool == "html/v1"][["rid", "turn_idx", "text"]]))
-        parts.append(_extract_plain_rows(
-            pdf[~tool.isin(["page/v1", "html/v1"])][["rid", "turn_idx", "text"]],
-            variant=variant))
-        layouts = pd.concat(parts, ignore_index=True)
-    except Exception:  # noqa: BLE001 — batch-level degrade: per-turn oracle
-        pairs = [
-            (rid, extract_turn(text, t if t in ("page/v1", "plain") else "plain", int(turn_idx), variant)
-             if t != "html/v1" else _html_oracle(text, int(turn_idx)))
-            for rid, turn_idx, text, t in pdf[["rid", "turn_idx", "text", "tool"]]
-            .assign(tool=tool).itertuples(index=False)
-        ]
-        layouts = _rows_from_oracle(pairs)
-
-    merged = pdf.drop(columns=["text"]).merge(layouts, on="rid").sort_values("rid")
-    cols = columns or ([c for c in PASSTHROUGH if c in merged.columns] + LAYOUT_FIELDS)
-    return merged[cols].reset_index(drop=True)
-
-
-def _html_oracle(text: str, turn_idx: int) -> dict:
-    try:
-        res = strip_boilerplate(text)
-        return {
-            "page_number": turn_idx + 1,
-            "header": res["header"], "footer": res["footer"],
-            "left_column": res["left_column"], "right_column": res["right_column"],
-            "page_width": 0.0, "page_height": 0.0,
-            "column_separator_position": None,
-            "metadata": res["metadata"],
-        }
-    except Exception as exc:  # noqa: BLE001
-        return {
-            "page_number": turn_idx + 1,
-            "header": "", "footer": "", "left_column": "", "right_column": "",
-            "page_width": 0.0, "page_height": 0.0,
-            "column_separator_position": None,
-            "metadata": {"error": json.dumps(str(exc), ensure_ascii=False)},
-        }
+    pdf, layouts = _batch_layouts(pdf, (variant,))
+    return _with_passthrough(pdf, layouts[variant], columns)
 
 
 _LAYOUT_FIELD_DDL = {
@@ -1023,8 +928,7 @@ def blocks_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     (/root/reference/A003_colored_footer.py:66-110) exposed as a scan."""
     pdf = pdf.reset_index(drop=True)
     pdf["rid"] = np.arange(len(pdf), dtype=np.int64)
-    tool = pdf["tool"].fillna("plain")
-    page_rows = pdf[tool == "page/v1"][["rid", "turn_idx", "text"]]
+    page_rows = pdf[pdf["tool"] == "page/v1"][["rid", "turn_idx", "text"]]
     cols = ["conv_id", "turn_idx", "block_idx", "x0", "y0", "x1", "y1",
             "font_size", "font_name", "text"]
     state, _errs = _tokenize_stage(page_rows)
@@ -1066,39 +970,13 @@ def clip_blocks(blocks, x0: float, y0: float, x1: float, y1: float):
 
 
 def extract_batch_multi(pdf: pd.DataFrame, variants) -> pd.DataFrame:
-    """Multi-variant extraction for one Arrow batch: tokenize the page
-    payloads once, classify per variant; html/plain rows are
-    variant-independent and computed once, replicated per variant. Output
-    adds ``extractor_name``."""
-    pdf = pdf.reset_index(drop=True)
-    pdf["rid"] = np.arange(len(pdf), dtype=np.int64)
-    tool = pdf["tool"].fillna("plain")
-    try:
-        per_variant = _extract_page_rows_multi(
-            pdf[tool == "page/v1"][["rid", "turn_idx", "text"]], variants)
-        html = _extract_html_rows(pdf[tool == "html/v1"][["rid", "turn_idx", "text"]])
-        plain_src = pdf[~tool.isin(["page/v1", "html/v1"])][["rid", "turn_idx", "text"]]
-        frames = []
-        for v in variants:
-            # plain rows carry variant-keyed metadata (a000 differs), so
-            # they are per-variant; html rows are variant-independent
-            layouts = pd.concat(
-                [per_variant[v], html, _extract_plain_rows(plain_src, variant=v)],
-                ignore_index=True)
-            merged = pdf.drop(columns=["text"]).merge(layouts, on="rid").sort_values("rid")
-            cols = [c for c in PASSTHROUGH if c in merged.columns] + LAYOUT_FIELDS
-            out = merged[cols].reset_index(drop=True)
-            out["extractor_name"] = v
-            frames.append(out)
-        return pd.concat(frames, ignore_index=True)
-    except Exception:  # noqa: BLE001 — batch-level degrade: per-variant oracle
-        src = pdf.drop(columns=["rid"])
-        frames = []
-        for v in variants:
-            out = extract_batch(src.copy(), variant=v)
-            out["extractor_name"] = v
-            frames.append(out)
-        return pd.concat(frames, ignore_index=True)
+    """Multi-variant extraction for one Arrow batch: ``extract_batch`` for
+    every variant from one pass of the core. Output adds
+    ``extractor_name``."""
+    pdf, layouts = _batch_layouts(pdf, variants)
+    return pd.concat(
+        [_with_passthrough(pdf, layouts[v]).assign(extractor_name=v) for v in variants],
+        ignore_index=True)
 
 
 def extract_layouts_multi(df, variants=("a002", "a003", "a004")):

@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass
 
+from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.payload import (
     A000_KEEP_TYPES,
     Block,
@@ -369,21 +370,44 @@ def _error_layout(turn_idx: int, message: str) -> dict:
     }
 
 
+def _html_layout(payload: str, turn_idx: int) -> dict:
+    res = strip_boilerplate(payload)
+    return {
+        "page_number": turn_idx + 1,
+        "header": res["header"],
+        "footer": res["footer"],
+        "left_column": res["left_column"],
+        "right_column": res["right_column"],
+        "page_width": 0.0,
+        "page_height": 0.0,
+        "column_separator_position": None,
+        "metadata": res["metadata"],
+    }
+
+
 def extract_turn(
     payload: str, tool: str, turn_idx: int, variant: str = "a003"
 ) -> dict:
     """Extract one turn's layout — the per-page map D1 (A003:282-326).
 
     ``tool`` dispatches the payload kind (the analog of EXTRACTOR_MAP,
-    /root/reference/tests/extractor_config.py:33-45):
+    the reference's tests/extractor_config.py:33-45):
 
     * ``page/v1`` — full layout payload, tokenized per payload.py
+    * ``html/v1`` — DOM boilerplate stripping (oracle/boilerplate.py):
+      header/footer/main content on a zero-size page, no separator; the
+      variant does not apply
     * ``plain``   — raw text; handled like the reference's get_text()
       fallback: one whole-page block (612x792, size 12.0, font "Unknown")
-    * anything else falls back to ``plain`` semantics
+    * anything else, null included, falls back to ``plain`` semantics
+
+    A payload that fails extraction becomes an error row, never an
+    exception.
     """
     cfg = VARIANTS[variant]
     try:
+        if tool == "html/v1":
+            return _html_layout(payload, turn_idx)
         if tool == "page/v1":
             try:
                 page = parse_payload(payload)

@@ -27,3 +27,18 @@ def transcripts_sf0001():
     from pdf_parser_spark.generator import transcripts_path
 
     return transcripts_path(0.001)
+
+
+@pytest.fixture(scope="module")
+def no_oracle_fallback():
+    """Switch off extraction's batch-level oracle fallback for a test
+    module: a vectorized core that raises then fails the module's parity
+    tests instead of passing on the oracle's own rows."""
+    from pdf_parser_spark.operators import extract
+
+    def reraise(pdf, variants, exc):
+        raise exc
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(extract, "_oracle_fallback", reraise)
+        yield

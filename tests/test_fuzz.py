@@ -3,18 +3,21 @@ single-process oracle on ARBITRARY inputs (not just fixture archetypes),
 and must never raise — the degrade-don't-fail invariant (D1) under fuzz.
 
 Pure-Python (no Spark session): exercises extract_batch directly, which is
-exactly the code mapInPandas runs per Arrow batch.
+exactly the code mapInPandas runs per Arrow batch, with its batch-level
+oracle fallback switched off so the vectorized core itself is checked.
 """
 
 import math
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pdf_parser_spark.operators.extract import extract_batch
-from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.oracle.extractor import extract_turn
+
+pytestmark = pytest.mark.usefixtures("no_oracle_fallback")
 
 # --- payload-ish text strategies -----------------------------------------
 
@@ -75,32 +78,6 @@ def _norm_float(v):
     return round(float(v), 6)
 
 
-def _oracle_row(text, tool, turn_idx):
-    if tool == "html/v1":
-        try:
-            res = strip_boilerplate(text)
-            return {
-                "page_number": turn_idx + 1,
-                "header": res["header"], "footer": res["footer"],
-                "left_column": res["left_column"],
-                "right_column": res["right_column"],
-                "page_width": 0.0, "page_height": 0.0,
-                "column_separator_position": None,
-                "metadata": res["metadata"],
-            }
-        except Exception as exc:  # noqa: BLE001
-            import json
-
-            return {
-                "page_number": turn_idx + 1,
-                "header": "", "footer": "", "left_column": "",
-                "right_column": "", "page_width": 0.0, "page_height": 0.0,
-                "column_separator_position": None,
-                "metadata": {"error": json.dumps(str(exc), ensure_ascii=False)},
-            }
-    return extract_turn(text, tool if tool == "page/v1" else "plain", turn_idx)
-
-
 @settings(max_examples=100, deadline=None)
 @given(st.lists(_page_payload, min_size=1, max_size=6))
 def test_a000_vectorized_equals_oracle_on_fuzz(payloads):
@@ -147,7 +124,7 @@ def test_vectorized_equals_oracle_on_fuzz(rows):
     assert len(got) == len(rows)
     assert list(got["turn_idx"]) == list(range(len(rows)))
     for i, (text, tool) in enumerate(rows):
-        want = _oracle_row(text, tool, i)
+        want = extract_turn(text, tool, i)
         g = got.iloc[i]
         for k in ("page_number", "header", "footer", "left_column", "right_column"):
             assert g[k] == want[k], (k, text, tool)

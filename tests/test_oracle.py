@@ -250,3 +250,40 @@ class TestBoilerplateTokenizer:
         res = self._strip(
             "<p><a href=foo/>all of this text is one link body padding</a></p>")
         assert res["left_column"] == ""  # anchor really opened -> link-stripped
+
+
+class TestToolDispatch:
+    """``extract_turn`` is the one per-turn dispatch for every tool."""
+
+    HTML = ("<header>Site header text</header><nav><a href=x>Home</a></nav>"
+            "<p>Main content paragraph that is long enough to keep.</p>"
+            "<footer>Copyright footer line</footer>")
+
+    def test_html_equals_strip_boilerplate(self):
+        from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
+
+        res = strip_boilerplate(self.HTML)
+        got = extract_turn(self.HTML, "html/v1", 3)
+        assert got == {
+            "page_number": 4,
+            "header": res["header"], "footer": res["footer"],
+            "left_column": res["left_column"], "right_column": res["right_column"],
+            "page_width": 0.0, "page_height": 0.0,
+            "column_separator_position": None,
+            "metadata": res["metadata"],
+        }
+        assert got["left_column"].startswith("Main content")
+        # the html path does not depend on the layout variant
+        assert extract_turn(self.HTML, "html/v1", 3, variant="a000") == got
+
+    def test_non_string_html_payload_is_error_row(self):
+        got = extract_turn(12345, "html/v1", 0)
+        assert set(got["metadata"]) == {"error"}
+        assert (got["page_number"], got["left_column"], got["page_width"],
+                got["column_separator_position"]) == (1, "", 0.0, None)
+
+    def test_null_and_unknown_tools_are_plain(self):
+        want = extract_turn(" some text ", "plain", 0)
+        assert want["right_column"] == "some text"
+        assert extract_turn(" some text ", None, 0) == want
+        assert extract_turn(" some text ", "exotic/v9", 0) == want

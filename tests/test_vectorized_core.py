@@ -1,5 +1,7 @@
 """Property: the vectorized Arrow-batch core equals the per-turn oracle on
-every fixture archetype (SURVEY.md section 7 step 3) — no Spark needed."""
+every fixture archetype (SURVEY.md section 7 step 3) — no Spark needed.
+The batch-level oracle fallback is switched off here, so these tests check
+the core itself."""
 
 import numpy as np
 import pandas as pd
@@ -11,9 +13,11 @@ from pdf_parser_spark.generator import (
     make_page_payload,
     make_turn,
 )
-from pdf_parser_spark.operators.extract import extract_batch
+from pdf_parser_spark.operators.extract import extract_batch, extract_batch_multi
 from pdf_parser_spark.oracle.extractor import extract_turn
 from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
+
+pytestmark = pytest.mark.usefixtures("no_oracle_fallback")
 
 
 def _batch_frame(rows):
@@ -65,12 +69,26 @@ def test_mixed_batch_all_tools_order_preserved():
     assert len(out) == len(rows)
     assert list(out["turn_idx"]) == [r[1] for r in rows]
     for i, (conv, turn_idx, _, text, tool) in enumerate(rows):
-        if tool == "html/v1":
-            want_main = strip_boilerplate(text)["left_column"]
-            assert out.iloc[i]["left_column"] == want_main
-        else:
-            want = extract_turn(text, tool if tool == "page/v1" else "plain", turn_idx)
-            _assert_layout_equal(out.iloc[i], want, f"mixed[{i}] tool={tool}")
+        want = extract_turn(text, tool, turn_idx)
+        _assert_layout_equal(out.iloc[i], want, f"mixed[{i}] tool={tool}")
+
+
+def test_output_dtypes_same_for_tool_pure_and_mixed_batches():
+    """Empty per-tool parts must not decide the output dtypes: page-only,
+    html-only, plain-only and mixed batches agree, for one variant and
+    for the multi-variant fan-out."""
+    rows = [("d", i, *make_turn("d", i)) for i in range(40)]
+    rows.append(("d", 40, "user", "free text", None))
+    batch = _batch_frame(rows)
+    assert set(batch["tool"].dropna()) == {"page/v1", "html/v1", "plain"}
+    pure = {t: batch[batch["tool"] == t] for t in ("page/v1", "html/v1", "plain")}
+    for run in (extract_batch, lambda b: extract_batch_multi(b, ("a000", "a003"))):
+        want = run(batch.copy()).dtypes
+        assert want["page_number"] == np.int64
+        assert want["column_separator_position"] == np.float64
+        for tool, sub in pure.items():
+            got = run(sub.copy()).dtypes
+            pd.testing.assert_series_equal(got, want, obj=tool)
 
 
 def test_html_batch_spans_and_labels():
@@ -178,3 +196,18 @@ def test_a000_vectorized_matches_oracle_per_archetype(archetype):
     for i, (conv, turn_idx, _, payload, _tool) in enumerate(rows):
         want = extract_turn(payload, "page/v1", turn_idx, variant="a000")
         _assert_layout_equal(out.iloc[i], want, f"a000 {archetype}[{i}]")
+
+
+def test_a000_plain_turns_match_oracle():
+    """A000's P8 stub filter applies to a plain turn's one block too: a
+    Table/Figure-typed text is dropped, identically in core and oracle."""
+    from pdf_parser_spark.payload import A000_KEEP_TYPES, stub_block_type
+
+    texts = [f"plain text {i}" for i in range(12)] + ["   ", None]
+    kept = [stub_block_type(t) in A000_KEEP_TYPES for t in texts[:12]]
+    assert any(kept) and not all(kept)
+    rows = [("a0p", i, "user", t, "plain") for i, t in enumerate(texts)]
+    out = extract_batch(_batch_frame(rows), variant="a000")
+    for i, text in enumerate(texts):
+        want = extract_turn(text, "plain", i, variant="a000")
+        _assert_layout_equal(out.iloc[i], want, f"a000 plain[{i}]")
