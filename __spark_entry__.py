@@ -4947,8 +4947,9 @@ def oracle_sql() -> dict[str, str]:
                        regexp_replace(
                            regexp_replace(
                                regexp_replace(href, '#.*$', ''),
-                               '[?&]utm_[^&]*', '', 'g'),
-                           '^([^?]*)&', '\\1?') AS u
+                               '^([^?]*)[?]utm_[^&]*(&utm_[^&]*)*&',
+                               '\\1?'),
+                           '[?&]utm_[^&]*', '', 'g') AS u
                 FROM {rel}),
             hp AS (
                 SELECT *,

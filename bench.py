@@ -1,5 +1,5 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the host's cores). Prints ONE JSON line:
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ..., "turns_per_sec": ...}
@@ -49,12 +49,11 @@ from pdf_parser_spark.session import ensure_min_partitions, get_spark  # noqa: E
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_from_dir(sf_dir)
     tpath = transcripts_path(sf)
 
-    spark = get_spark("pdf-parser-bench", cpus=cpus)
-    n_cores = int(cpus) if str(cpus).isdigit() else 32
+    spark = get_spark("pdf-parser-bench")
+    n_cores = spark.sparkContext.defaultParallelism
     transcripts = ensure_min_partitions(spark.read.parquet(tpath), n_cores * 2)
     n_turns = transcripts.count()
     # Prefer the non-replica fixtures when the sf dir carries them
@@ -314,7 +313,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "n_turns": n_turns,
-        "cpus": int(cpus),
+        "cpus": n_cores,
         "turns_per_sec": round(n_turns / extract_sec, 1),
     }
     if fixture:

@@ -59,8 +59,10 @@ def url_canonicalize(url) -> "F.Column":
     no lazy quantifiers — RE2-compatible so the DuckDB twin replays it):
 
       1. strip the fragment (`#...`)
-      2. drop `utm_*` tracking params wherever they sit, then repair a
-         query that lost its leading `?`
+      2. drop `utm_*` tracking params wherever they sit; when the
+         query's leading params are `utm_*` and others follow, the
+         first of those takes over the `?` (an `&` elsewhere, e.g. in
+         the path, stays as it is)
       3. lowercase scheme://host[:port] (authority only — paths stay
          case-sensitive)
       4. strip the scheme's default port (:80 http, :443 https)
@@ -69,8 +71,8 @@ def url_canonicalize(url) -> "F.Column":
     Accepts a column or column name; returns the canonical-url column.
     """
     u = F.regexp_replace(url, "#.*$", "")
+    u = F.regexp_replace(u, "^([^?]*)[?]utm_[^&]*(&utm_[^&]*)*&", "$1?")
     u = F.regexp_replace(u, "[?&]utm_[^&]*", "")
-    u = F.regexp_replace(u, "^([^?]*)&", "$1?")
     head = F.regexp_extract(u, "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)
     tail = u.substr(F.length(head) + F.lit(1), F.length(u))
     head = F.lower(head)
@@ -188,7 +190,7 @@ def blocklist_filter(df: DataFrame, blocked=None,
             lambda h: h.rlike(ABS_HTTP_RE)
             & registrable_domain(url_host(url_canonicalize(h)))
             .isin(*blocked))
-        return df.filter(~hit)
+        return df.filter(~F.coalesce(hit, F.lit(False)))
     links = extract_links(df, id_cols=id_cols, text_col=text_col) \
         .filter(F.col("href").rlike(ABS_HTTP_RE))
     canon = url_canonicalize(F.col("href"))

@@ -22,9 +22,9 @@ import os
 import pandas as pd
 
 from pdf_parser_spark.generator import transcripts_path
-from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
+from pdf_parser_spark.oracle.boilerplate import content_spans
 from pdf_parser_spark.oracle.extractor import extract_turn
-from pdf_parser_spark.payload import Block, TokenizeError, parse_payload
+from pdf_parser_spark.payload import page_blocks
 from pdf_parser_spark.oracle.questions import extract_questions_from_text
 
 GOLDEN_BASE = "/root/repo/data/golden"
@@ -85,23 +85,6 @@ def markdown_c002(n, header, footer, left, right) -> str:
         "## Footer", f_, "\n",
     ]
     return "\n".join(frags)
-
-
-def _oracle_blocks(text) -> list:
-    """The reference get_text_blocks contract on one payload: merged
-    line-blocks, S3 fallback block on tokenize failure, [] when the
-    payload is unparseable (those turns become D1 error rows with no
-    blocks)."""
-    try:
-        return parse_payload(text).blocks
-    except TokenizeError as exc:
-        if exc.salvaged_text.strip():
-            return [Block(text=exc.salvaged_text.strip(), x0=0.0, y0=0.0,
-                          x1=exc.width, y1=exc.height,
-                          font_size=12.0, font_name="Unknown")]
-        return []
-    except Exception:  # noqa: BLE001 — null / malformed payloads
-        return []
 
 
 def ensure_goldens(sf: float) -> str:
@@ -167,12 +150,9 @@ def ensure_goldens(sf: float) -> str:
                  "has_footer": md.get("has_footer"),
                  "page_rect": md.get("page_rect"),
                  "is_error": int("error" in md)})
-            for bi, b in enumerate(_oracle_blocks(text)):
+            for bi, b in enumerate(page_blocks(text)):
                 block_rows.append(
-                    {"conv_id": conv_id, "turn_idx": t, "block_idx": bi,
-                     "x0": b.x0, "y0": b.y0, "x1": b.x1, "y1": b.y1,
-                     "font_size": b.font_size, "font_name": b.font_name,
-                     "text": b.text})
+                    {"conv_id": conv_id, "turn_idx": t, "block_idx": bi, **vars(b)})
             layouts_a002.append(
                 _layout_row(conv_id, t, extract_turn(text, tool, t, "a002")))
             layouts_a000.append(
@@ -196,11 +176,7 @@ def ensure_goldens(sf: float) -> str:
                         }
                     )
         elif tool == "html/v1":
-            res = strip_boilerplate(text)
-            import hashlib
-
-            main = res["left_column"]
-            for i, (start, end) in enumerate(res["spans"]):
+            for i, (start, end, md5) in enumerate(content_spans(text)):
                 spans.append(
                     {
                         "conv_id": conv_id,
@@ -208,8 +184,7 @@ def ensure_goldens(sf: float) -> str:
                         "span_idx": i,
                         "start_offset": start,
                         "end_offset": end,
-                        "block_md5": hashlib.md5(
-                            main[start:end].encode("utf-8")).hexdigest(),
+                        "block_md5": md5,
                     }
                 )
 

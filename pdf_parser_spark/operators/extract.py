@@ -16,16 +16,26 @@ runs inside ``_batch_layouts``, which holds the only oracle fallback;
 against the oracle with that fallback switched off, so a raising core fails
 them; ``tests/test_extract_golden.py`` checks the Spark operator.
 
+Degraded pages come from the oracle too. ``_tokenize_stage`` only decides
+which page rows are degraded (no valid PAGE header, or a malformed SPAN
+record); ``extract_turn`` gives their D1 error row or S3 fallback page,
+so each rule is written once, in ``payload.py`` and the oracle. They are
+2 of the generator's 13 page archetypes, not the hot path. The parity
+tests cannot see a well-formed page wrongly sent there, since the
+oracle's rows are always right; the routing tests in
+``tests/test_vectorized_core.py`` and ``tests/test_fuzz.py`` check that
+the degraded rows are exactly those ``payload.parse_payload`` rejects.
+
 Scale design:
 
 * extraction is turn-local -> embarrassingly parallel; no shuffle is needed
   for the map phase, so mega-conversation skew cannot serialize it
 * the only Python<->JVM boundary is Arrow batch transport (mapInPandas)
-* per-turn error handling degrades to error rows, never fails the task
-  (D1 semantics, A003:328-341); if the core itself raises on a
-  pathological batch, the batch falls back to the per-turn oracle (slow but
-  identical semantics) and a warning naming the exception is logged,
-  preserving degrade-don't-fail at batch granularity
+* a failing turn degrades to an error row, never fails the task (D1
+  semantics, A003:328-341); if the core itself raises on a pathological
+  batch, the batch falls back to the per-turn oracle (slow but identical
+  semantics) and a warning naming the exception is logged, preserving
+  degrade-don't-fail at batch granularity
 """
 
 from __future__ import annotations
@@ -38,7 +48,8 @@ import numpy as np
 import pandas as pd
 
 from pdf_parser_spark.oracle.extractor import VARIANTS, extract_turn
-from pdf_parser_spark.payload import A000_KEEP_TYPES, stub_block_type, unescape_text
+from pdf_parser_spark.payload import (
+    A000_KEEP_TYPES, page_blocks, stub_block_type, unescape_text)
 
 _log = logging.getLogger(__name__)
 
@@ -82,43 +93,26 @@ def _empty_layout_frame() -> pd.DataFrame:
         c: pd.Series([], dtype=dtypes.get(c, object)) for c in ["rid"] + LAYOUT_FIELDS})
 
 
-def _error_frame(rids: np.ndarray, turn_idx: pd.Series, messages) -> pd.DataFrame:
-    """D1 error rows (A003:328-341), vectorized."""
-    n = len(rids)
-    return pd.DataFrame(
-        {
-            "rid": rids,
-            "page_number": turn_idx.to_numpy() + 1,
-            "header": [""] * n,
-            "footer": [""] * n,
-            "left_column": [""] * n,
-            "right_column": [""] * n,
-            "page_width": np.zeros(n),
-            "page_height": np.zeros(n),
-            "column_separator_position": np.full(n, np.nan),
-            "metadata": [{"error": json.dumps(m, ensure_ascii=False)} for m in messages],
-        }
-    )
-
-
-_GROUP_SENTINEL = "\x01"
-
-
-def _segmented_join(texts: np.ndarray, seps: np.ndarray) -> list:
-    """Concatenate ``seps[i] + texts[i]`` over the whole array in one C-level
-    join, then split on the group sentinel — one output string per group.
+def _segmented_join(texts: np.ndarray, seps: np.ndarray, starts: np.ndarray) -> list:
+    """One string per group: ``seps[i] + texts[i]`` concatenated over each
+    group's members, the groups being the runs that begin at the indices
+    ``starts``. Each separator is "" or one character, and "" at a group
+    start. One C-level join over the whole array, cut at cumulative-length
+    offsets, so any text passes through as is.
 
     This replaces pandas ``groupby().agg(str.join)``, whose pure-Python
     per-group loop dominated profiles AND caused negative core-scaling
     (PyObject allocator churn saturates memory bandwidth when 32 workers
     run it concurrently). Cost here is O(total chars), allocation-light.
-    The caller guarantees seps[0] == "" and marks group starts with
-    ``_GROUP_SENTINEL``.
     """
-    out = [None] * (2 * len(texts))
-    out[0::2] = seps.tolist()
-    out[1::2] = texts.tolist()
-    return "".join(out).split(_GROUP_SENTINEL)
+    text_list = texts.tolist()
+    parts = [None] * (2 * len(text_list))
+    parts[0::2] = seps.tolist()
+    parts[1::2] = text_list
+    ends = np.cumsum(np.fromiter(map(len, text_list), np.int64, len(text_list)) + (seps != ""))
+    cuts = [0] + ends[starts[1:] - 1].tolist() + ends[-1:].tolist()
+    joined = "".join(parts)
+    return [joined[a:b] for a, b in zip(cuts[:-1], cuts[1:])]
 
 
 def _reassemble_regions(blocks: pd.DataFrame) -> pd.DataFrame:
@@ -160,21 +154,10 @@ def _join_line_groups(b: pd.DataFrame) -> pd.DataFrame:
     if n > 1:
         new_region[1:] = (rid2[1:] != rid2[:-1]) | (reg2[1:] != reg2[:-1])
         new_line[1:] = line2[1:] != line2[:-1]
-    if b["text"].str.contains(_GROUP_SENTINEL, regex=False).any():
-        # Sentinel collision (payload text containing \\x01): take the slow
-        # exact path rather than corrupt output.
-        lines = (
-            b.groupby(["rid", "region", "line_id"], sort=False)["text"]
-            .agg(" ".join).reset_index())
-        return (
-            lines.groupby(["rid", "region"], sort=False)["text"]
-            .agg("\n".join).reset_index())
-    seps = np.where(new_region, _GROUP_SENTINEL, np.where(new_line, "\n", " "))
-    seps[0] = ""
-    region_texts = _segmented_join(texts, seps)
+    seps = np.where(new_region, "", np.where(new_line, "\n", " "))
     starts = np.flatnonzero(new_region)
-    return pd.DataFrame(
-        {"rid": rid2[starts], "region": reg2[starts], "text": region_texts})
+    return pd.DataFrame({"rid": rid2[starts], "region": reg2[starts],
+                         "text": _segmented_join(texts, seps, starts)})
 
 
 _KW_RE_CACHE: dict = {}
@@ -222,36 +205,28 @@ def _tokenize_stage(rows: pd.DataFrame):
     """Variant-INdependent half of the page pipeline: payload tokenize,
     block building, drawing scan, separator search, colored regions
     (A003 stages 3a-3b; classification thresholds do not enter until
-    ``_classify_stage``). Returns ``(state, error_frames)`` where state is
-    None when no row survived tokenization. Splitting here lets
-    ``compare_extractors`` tokenize once and classify N times."""
-    out_parts = []
-    n = len(rows)
-    if n == 0:
-        return None, out_parts
+    ``_classify_stage``). Splitting here lets the multi-variant path
+    tokenize once and classify N times.
 
+    Returns ``(state, degraded)``. ``degraded`` holds the rows that
+    ``payload.parse_payload`` rejects, by the strict grammar shared with
+    it: no PAGE header, a malformed or out-of-bound header, or any
+    malformed SPAN record. Their output (the D1 error row, the S3
+    fallback block) is the oracle's, so nothing here builds it.
+    ``state`` covers the other rows and is None when none is left."""
     payload = rows["text"]
     is_str = payload.map(lambda v: isinstance(v, str))
-    no_page = ~(is_str & payload.where(is_str, "").str.startswith("PAGE "))
-    if no_page.any():
-        bad = rows[no_page]
-        out_parts.append(
-            _error_frame(
-                bad["rid"].to_numpy(), bad["turn_idx"],
-                ["payload has no PAGE header"] * len(bad),
-            )
-        )
-        rows = rows[~no_page]
-    if rows.empty:
-        return None, out_parts
+    degraded = ~(is_str & payload.where(is_str, "").str.startswith("PAGE ")).to_numpy()
+    if degraded.all():
+        return None, rows
 
     # --- explode payload records, keep payload order ------------------
-    recs = rows.set_index("rid")["text"].str.split("\n").explode()
+    recs = rows[~degraded].set_index("rid")["text"].str.split("\n").explode()
     recs_df = pd.DataFrame({"rid": recs.index.to_numpy(), "line": recs.to_numpy()})
     recs_df["pos"] = np.arange(len(recs_df))
 
-    first = recs_df.groupby("rid", sort=False).first()
-    page_kv = first["line"].str.extract(_PAGE_RE)
+    first = recs_df.groupby("rid", sort=False)["line"].first()
+    page_kv = first.str.extract(_PAGE_RE)
     # astype(float), not to_numeric: the regex already guarantees
     # parseability, and to_numeric's int inference loses float identity
     # ("612" -> 612.0 for page_rect stringification, "-0" -> -0.0)
@@ -259,27 +234,32 @@ def _tokenize_stage(rows: pd.DataFrame):
     heights = page_kv[1].astype(float)
     # non-finite / absurd dims ('1e999' overflows to inf) are malformed
     # headers on both sides — payload.py applies the identical bound
-    bad_header = ~(widths.abs() <= 1e12) | ~(heights.abs() <= 1e12)
-    if bad_header.any():
-        bad_rids = first.index[bad_header.to_numpy()]
-        bad_rows = rows[rows["rid"].isin(bad_rids)]
-        msgs = [
-            f"malformed PAGE header: {line!r}"
-            for line in first.loc[bad_rids, "line"]
-        ]
-        out_parts.append(_error_frame(bad_rows["rid"].to_numpy(), bad_rows["turn_idx"], msgs))
-        rows = rows[~rows["rid"].isin(bad_rids)]
+    ok_header = ((widths.abs() <= 1e12) & (heights.abs() <= 1e12)).to_numpy()
+
+    # SPAN records: one malformed record fails the page's tokenize
+    span_mask = recs_df["line"].str.startswith("SPAN ")
+    sp = recs_df.loc[span_mask, "line"].str.extract(_SPAN_RE)
+    sp.columns = ["x0", "y0", "x1", "y1", "size", "font", "text"]
+    sp["rid"] = recs_df.loc[span_mask, "rid"].to_numpy()
+    sp["pos"] = recs_df.loc[span_mask, "pos"].to_numpy()
+    bad_rids = np.union1d(first.index[~ok_header], sp.loc[sp["text"].isna(), "rid"])
+    if len(bad_rids):
+        degraded |= rows["rid"].isin(bad_rids).to_numpy()
+        if degraded.all():
+            return None, rows
         recs_df = recs_df[~recs_df["rid"].isin(bad_rids)]
-        widths = widths[~bad_header]
-        heights = heights[~bad_header]
-    if rows.empty:
-        return None, out_parts
+        sp = sp[~sp["rid"].isin(bad_rids)]
+        good_page = ~first.index.isin(bad_rids)
+        widths, heights = widths[good_page], heights[good_page]
+    rows, degraded = rows[~degraded], rows[degraded]
+    for c in ("x0", "y0", "x1", "y1", "size"):
+        sp[c] = sp[c].astype(float)
+    sp["text"] = _unescape_series(sp["text"].astype(str))
 
     dims = pd.DataFrame({"rid": widths.index, "w": widths.to_numpy(), "h": heights.to_numpy()})
 
-    # --- parse record kinds (vectorized regex per kind) ----------------
+    # --- drawing records (vectorized regex per kind) --------------------
     line = recs_df["line"]
-    span_mask = line.str.startswith("SPAN ")
     vline_mask = line.str.startswith("LINE ")
     rect_mask = line.str.startswith("RECT ")
 
@@ -296,44 +276,6 @@ def _tokenize_stage(rows: pd.DataFrame):
     rc.columns = ["x0", "y0", "x1", "y1", "r", "g", "b"]
     rc["rid"] = recs_df.loc[rect_mask, "rid"].to_numpy()
     rc = rc.dropna()
-
-    # SPAN records: a malformed one fails the rid's tokenize (S3 fallback)
-    sp_raw = line[span_mask]
-    sp = sp_raw.str.extract(_SPAN_RE)
-    sp.columns = ["x0", "y0", "x1", "y1", "size", "font", "text"]
-    sp["rid"] = recs_df.loc[span_mask, "rid"].to_numpy()
-    sp["pos"] = recs_df.loc[span_mask, "pos"].to_numpy()
-    for c in ("x0", "y0", "x1", "y1", "size"):
-        sp[c] = sp[c].astype(float)
-    sp_bad = sp["text"].isna() | sp[["x0", "y0", "x1", "y1", "size"]].isna().any(axis=1)
-    tokfail_rids = set(sp.loc[sp_bad, "rid"].unique())
-    sp = sp[~sp["rid"].isin(tokfail_rids)]
-    sp["text"] = _unescape_series(sp["text"].astype(str))
-
-    # --- S3 fallback blocks for tokenize-failure rids -------------------
-    fallback_blocks = []
-    if tokfail_rids:
-        salv_src = recs_df[span_mask & recs_df["rid"].isin(tokfail_rids)].copy()
-        tails = _unescape_series(
-            salv_src["line"].str.partition(" text=")[2].astype(str)
-        )
-        has_tail = salv_src["line"].str.contains(" text=", regex=False)
-        salv_src["tail"] = tails
-        salv = (
-            salv_src[has_tail]
-            .groupby("rid", sort=False)["tail"]
-            .agg("\n".join)
-        )
-        dims_idx = dims.set_index("rid")
-        for rid in sorted(tokfail_rids):
-            text = salv.get(rid, "")
-            if isinstance(text, str) and text.strip():
-                w = float(dims_idx.loc[rid, "w"])
-                h = float(dims_idx.loc[rid, "h"])
-                fallback_blocks.append(
-                    {"rid": rid, "x0": 0.0, "y0": 0.0, "x1": w, "y1": h,
-                     "font_size": 12.0, "font_name": "Unknown", "text": text.strip()}
-                )
 
     # --- G1: merge consecutive same-(y0,y1) spans into line-blocks ------
     if len(sp):
@@ -358,15 +300,9 @@ def _tokenize_stage(rows: pd.DataFrame):
             y1=("y1", "max"),
             font_size=("size", "max"),
         )
-        # G1 text concat via one C-level join+split (see _segmented_join);
-        # fall back to the per-group python join on sentinel collision.
-        texts_arr = sp["text"].to_numpy()
-        if sp["text"].str.contains(_GROUP_SENTINEL, regex=False).any():
-            blocks["text"] = sp.groupby("grp", sort=False)["text"].agg("".join)
-        else:
-            seps = np.where(new_grp, _GROUP_SENTINEL, "")
-            seps[0] = ""
-            blocks["text"] = _segmented_join(texts_arr, seps)
+        # G1 text concat via one C-level join (see _segmented_join)
+        blocks["text"] = _segmented_join(
+            sp["text"].to_numpy(), np.full(len(sp), ""), np.flatnonzero(new_grp))
         blocks["font_name"] = font_nonempty.groupby(sp["grp"]).first()
         blocks["font_name"] = blocks["font_name"].fillna("")
         blocks["text"] = blocks["text"].str.strip()
@@ -375,9 +311,6 @@ def _tokenize_stage(rows: pd.DataFrame):
         blocks = pd.DataFrame(
             columns=["rid", "x0", "y0", "x1", "y1", "font_size", "text", "font_name"]
         )
-    if fallback_blocks:
-        fb = pd.DataFrame(fallback_blocks)
-        blocks = fb if blocks.empty else pd.concat([blocks, fb], ignore_index=True)
 
     # --- P1 vertical-line predicate + O5 best-line separator ------------
     vlf = vl[(np.abs(vl["x2"] - vl["x1"]) < 5) & (np.abs(vl["y2"] - vl["y1"]) > 100)].copy()
@@ -424,7 +357,7 @@ def _tokenize_stage(rows: pd.DataFrame):
         "n_colored": n_colored, "footer_regions": footer_regions,
         "vl": vl,  # raw parsed LINE records: a000 re-filters proportionally
     }
-    return state, out_parts
+    return state, degraded
 
 
 def _classify_stage(state: dict, variant: str) -> pd.DataFrame:
@@ -802,22 +735,23 @@ def _concat_layouts(parts: list) -> pd.DataFrame:
 
 def _extract_core(pdf: pd.DataFrame, variants) -> dict:
     """The vectorized core, unguarded: ``{variant: layout frame}`` for a
-    batch with a ``rid`` column. Page payloads are tokenized once and
-    classified per variant (the reference's comparison runs every
+    batch with a ``rid`` column. Well-formed page payloads are tokenized
+    once and classified per variant (the reference's comparison runs every
     extractor on the same opened pages, pdf_layout_tester.py:325-365);
-    html rows do not depend on the variant and are computed once; plain
-    rows (null and unknown tools too) carry variant-keyed metadata and
-    are built per variant."""
+    degraded page rows come from the per-turn oracle, per variant; html
+    rows do not depend on the variant and are computed once; plain rows
+    (null and unknown tools too) carry variant-keyed metadata and are
+    built per variant."""
     cols = ["rid", "turn_idx", "text", "tool"]
     is_page = (pdf["tool"] == "page/v1").to_numpy()
     is_html = (pdf["tool"] == "html/v1").to_numpy()
-    state, page_errors = _tokenize_stage(pdf.loc[is_page, cols])
+    state, degraded = _tokenize_stage(pdf.loc[is_page, cols])
     html = [_oracle_rows(pdf.loc[is_html, cols])] if is_html.any() else []
     plain = pdf.loc[~(is_page | is_html), cols]
     return {
         v: _concat_layouts(
-            page_errors
-            + ([] if state is None else [_classify_stage(state, v)])
+            ([] if state is None else [_classify_stage(state, v)])
+            + ([_oracle_rows(degraded, v)] if len(degraded) else [])
             + html
             + ([_extract_plain_rows(plain, v)] if len(plain) else []))
         for v in variants
@@ -925,19 +859,26 @@ def blocks_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     non-empty filter), the S3 fallback block for tokenize failures, zero
     rows for unparseable turns — exactly the reference's
     ``get_text_blocks`` protocol method
-    (/root/reference/A003_colored_footer.py:66-110) exposed as a scan."""
+    (/root/reference/A003_colored_footer.py:66-110) exposed as a scan.
+    Degraded pages' blocks come from ``payload.page_blocks``."""
     pdf = pdf.reset_index(drop=True)
     pdf["rid"] = np.arange(len(pdf), dtype=np.int64)
     page_rows = pdf[pdf["tool"] == "page/v1"][["rid", "turn_idx", "text"]]
     cols = ["conv_id", "turn_idx", "block_idx", "x0", "y0", "x1", "y1",
             "font_size", "font_name", "text"]
-    state, _errs = _tokenize_stage(page_rows)
-    if state is None or state["blocks"].empty:
+    state, degraded = _tokenize_stage(page_rows)
+    parts = [] if state is None or state["blocks"].empty else [state["blocks"]]
+    fallback = [{"rid": rid, **vars(b)}
+                for rid, text in degraded[["rid", "text"]].itertuples(index=False)
+                for b in page_blocks(text)]
+    if fallback:
+        parts.append(pd.DataFrame(fallback))
+    if not parts:
         return pd.DataFrame(columns=cols).astype(
             {"turn_idx": np.int32, "block_idx": np.int32})
-    blocks = state["blocks"].copy()
+    blocks = pd.concat(parts, ignore_index=True)
     # rows are already in payload order within each rid (span position
-    # order; fallback blocks are each rid's only row)
+    # order; a degraded page's block is its rid's only row)
     blocks["block_idx"] = blocks.groupby("rid", sort=False).cumcount()
     out = blocks.merge(pdf[["rid", "conv_id", "turn_idx"]], on="rid")
     return out[cols]

@@ -15,7 +15,6 @@ it (explode ordering, the global sort) is relational.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -23,8 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Pattern verbatim from /root/reference/A004_Vision_2025.py:341.
-QUESTION_PATTERN = re.compile(r"(?:^|\n)\s*(?:Q\.?\s*)?(\d+)[\.\)]\s+", re.MULTILINE)
+from pdf_parser_spark.oracle.questions import extract_questions_from_text
 
 QUESTIONS_SCHEMA = (
     "conv_id string, turn_idx long, page_number long, question_number long, "
@@ -32,31 +30,17 @@ QUESTIONS_SCHEMA = (
 )
 
 
-def _spans_for_column(text: str) -> list:
-    """[(qnum, stripped_text, start, end)] per A004:346-356."""
-    if not text:
-        return []
-    matches = list(QUESTION_PATTERN.finditer(text))
-    out = []
-    for i, m in enumerate(matches):
-        start = m.start()
-        end = matches[i + 1].start() if i + 1 < len(matches) else len(text)
-        out.append((int(m.group(1)), text[start:end].strip(), start, end))
-    return out
-
-
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        recs = []
-        for conv_id, turn_idx, page_number, left, right in pdf[
-            ["conv_id", "turn_idx", "page_number", "left_column", "right_column"]
-        ].itertuples(index=False):
-            for col_side, text in (("left", left), ("right", right)):
-                for qnum, qtext, start, end in _spans_for_column(text):
-                    recs.append(
-                        (conv_id, int(turn_idx), int(page_number), qnum,
-                         qtext, col_side, start, end)
-                    )
+        recs = [
+            (conv_id, int(turn_idx), int(page_number), q["question_number"],
+             q["question_text"], col_side, q["start_offset"], q["end_offset"])
+            for conv_id, turn_idx, page_number, left, right in pdf[
+                ["conv_id", "turn_idx", "page_number", "left_column", "right_column"]
+            ].itertuples(index=False)
+            for col_side, text in (("left", left), ("right", right))
+            for q in extract_questions_from_text(text, col_side, page_number)
+        ]
         yield pd.DataFrame(
             recs,
             columns=["conv_id", "turn_idx", "page_number", "question_number",

@@ -4,20 +4,19 @@ The north rule requires "cleaned main-content text and span offsets per
 turn" (BASELINE.json:north_star). ``extract_layouts`` emits the cleaned
 text; this operator emits the span offsets of each kept content block
 inside that cleaned text, as exploded rows. Offsets come from the same
-single source of truth (oracle/boilerplate.strip_boilerplate), so text and
-spans can never drift apart.
+single source of truth (oracle/boilerplate.strip_boilerplate, via
+``content_spans``), so text and spans can never drift apart.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
+from pdf_parser_spark.oracle.boilerplate import content_spans
 
 SPANS_SCHEMA = (
     "conv_id string, turn_idx long, span_idx long, start_offset long, "
@@ -30,20 +29,16 @@ def _span_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         recs = []
         for conv_id, turn_idx, text in pdf[["conv_id", "turn_idx", "text"]].itertuples(index=False):
             try:
-                res = strip_boilerplate(text)
-                main = res["left_column"]
-                # accumulate locally and extend() only after the whole
-                # turn succeeds — a failure mid-span-list (encode error,
-                # int cast) must not leave the turn partially emitted
+                # build the whole turn before extend(): a failure mid-span
+                # list must not leave the turn partially emitted
                 # (all-or-nothing per-turn degrade, D1 semantics)
                 turn_recs = [
-                    (conv_id, int(turn_idx), i, start, end,
-                     hashlib.md5(main[start:end].encode("utf-8")).hexdigest())
-                    for i, (start, end) in enumerate(res["spans"])
+                    (conv_id, int(turn_idx), i, start, end, md5)
+                    for i, (start, end, md5) in enumerate(content_spans(text))
                 ]
-                recs.extend(turn_recs)
             except Exception:  # noqa: BLE001 — degrade per turn (D1)
                 continue
+            recs.extend(turn_recs)
         yield pd.DataFrame(
             recs,
             columns=["conv_id", "turn_idx", "span_idx", "start_offset",

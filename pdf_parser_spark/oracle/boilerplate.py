@@ -26,6 +26,7 @@ offsets per turn" required by BASELINE.json:north_star.
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 TAG_RE = re.compile(r"<(/?)([a-zA-Z][a-zA-Z0-9]*)((?:[^>'\"]|'[^']*'|\"[^\"]*\")*?)(/?)>")
@@ -246,3 +247,13 @@ def strip_boilerplate(payload: str) -> dict:
         "spans": spans,
         "metadata": {k: json.dumps(v) for k, v in counts.items()},
     }
+
+
+def content_spans(payload: str) -> list:
+    """``[(start, end, md5)]`` per content block of ``strip_boilerplate``:
+    the block's offsets into the cleaned main text and the md5 hex digest
+    of its text — one turn of the content-span relation."""
+    res = strip_boilerplate(payload)
+    main = res["left_column"]
+    return [(start, end, hashlib.md5(main[start:end].encode("utf-8")).hexdigest())
+            for start, end in res["spans"]]

@@ -37,8 +37,7 @@ from pdf_parser_spark.payload import (
     Block,
     ParsedPage,
     PayloadError,
-    TokenizeError,
-    parse_payload,
+    parse_page,
     stub_block_type,
 )
 
@@ -409,27 +408,11 @@ def extract_turn(
         if tool == "html/v1":
             return _html_layout(payload, turn_idx)
         if tool == "page/v1":
-            try:
-                page = parse_payload(payload)
-                blocks = page.blocks
-            except TokenizeError as exc:
-                # S3 fallback: whole-page single block (A003:94-108). The
-                # fallback replaces any partially tokenized blocks; it spans
-                # the real page rect, already parsed from the PAGE header.
-                # Drawings survive (separate scan in the reference,
-                # A003:38,53) and still drive separator/footer logic.
-                page = ParsedPage(width=exc.width, height=exc.height,
-                                  lines=exc.lines, rects=exc.rects)
-                blocks = []
-                if exc.salvaged_text.strip():
-                    blocks = [
-                        Block(
-                            text=exc.salvaged_text.strip(),
-                            x0=0.0, y0=0.0, x1=page.width, y1=page.height,
-                            font_size=12.0, font_name="Unknown",
-                        )
-                    ]
-                page.blocks = blocks
+            # S3 fallback on a span-tokenize failure: its drawings survive
+            # (a separate scan in the reference, A003:38,53) and still
+            # drive separator/footer logic
+            page = parse_page(payload)
+            blocks = page.blocks
         else:
             if payload is None:
                 raise PayloadError("null payload")

@@ -29,7 +29,7 @@ Error semantics mirror the reference's two failure levels:
   ``extract_page_layout``'s outer try/except,
   /root/reference/A003_colored_footer.py:328-341).
 * A malformed ``SPAN`` record raises :class:`TokenizeError` carrying the
-  leniently salvaged page text -> the caller falls back to a single
+  leniently salvaged page text -> :func:`parse_page` falls back to a single
   whole-page block with font_size 12.0 / font "Unknown" (the analog of the
   ``page.get_text()`` fallback, /root/reference/A003_colored_footer.py:94-108).
 * Malformed ``LINE`` / ``RECT`` records are skipped (the reference wraps
@@ -288,3 +288,34 @@ def parse_payload(payload: str) -> ParsedPage:
             )
         i = j
     return page
+
+
+def parse_page(payload: str) -> ParsedPage:
+    """``parse_payload`` with the S3 rule applied: a span-tokenize failure
+    yields the page parsed from its header and drawings, with one
+    whole-page block of the salvaged text (font_size 12.0, font
+    "Unknown"), or no block when nothing was salvaged — the analog of the
+    reference's ``page.get_text()`` fallback (A003:94-108). A payload
+    without a valid PAGE header still raises :class:`PayloadError`, the
+    caller's D1 error row. The one definition of a degraded page's
+    blocks, for the oracle, the goldens and the Spark block table."""
+    try:
+        return parse_payload(payload)
+    except TokenizeError as exc:
+        page = ParsedPage(width=exc.width, height=exc.height,
+                          lines=exc.lines, rects=exc.rects)
+        text = exc.salvaged_text.strip()
+        if text:
+            page.blocks.append(Block(text=text, x0=0.0, y0=0.0,
+                                     x1=exc.width, y1=exc.height,
+                                     font_size=12.0, font_name="Unknown"))
+        return page
+
+
+def page_blocks(payload: str) -> list:
+    """The reference's ``get_text_blocks`` on one payload: ``parse_page``'s
+    blocks, none for a payload without a valid PAGE header."""
+    try:
+        return parse_page(payload).blocks
+    except PayloadError:
+        return []

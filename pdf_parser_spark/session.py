@@ -15,7 +15,12 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app: str = "pdf-parser-spark", cpus: str | None = None) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Session sized from the host unless told otherwise: ``cpus``, else
+    $SPARK_GRAFT_CPUS, else the cores this process may run on; driver
+    memory $SPARK_DRIVER_MEMORY, else a quarter of the host's RAM
+    (MemTotal), at least 1 GiB."""
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    mem_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
     shuffle_parts = max(32, int(cpus) * 2) if str(cpus).isdigit() else 64
     return (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -33,7 +38,8 @@ def get_spark(app: str = "pdf-parser-spark", cpus: str | None = None) -> SparkSe
         .config("spark.sql.files.maxPartitionBytes",
                 os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", "4194304"))
         .config("spark.sql.files.openCostInBytes", "262144")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or f"{max(1024, mem_mb // 4)}m")
         # Long single-JVM sessions accumulate shuffle state whose cleanup
         # piggybacks on driver GC; force it periodically so back-to-back
         # jobs don't degrade (cluster deployments get this from executor

@@ -1135,7 +1135,7 @@ def test_converged_max_iters_guard(spark):
 def test_url_canonicalize_cases(spark):
     """Canonicalization table: fragments, utm params in every position,
     default/non-default ports, case-mixed scheme+host, trailing
-    slashes — each case hand-derived."""
+    slashes, an `&` in the path — each case hand-derived."""
     from pdf_parser_spark.corpus.links import url_canonicalize
 
     cases = [
@@ -1151,6 +1151,8 @@ def test_url_canonicalize_cases(spark):
         ("http://tracker.ads.io/p?utm_a=1&utm_b=2",
          "http://tracker.ads.io/p"),
         ("https://example.com", "https://example.com/"),
+        ("http://h.com/a&b", "http://h.com/a&b"),
+        ("http://h.com/a&b?utm_x=1&c=2", "http://h.com/a&b?c=2"),
     ]
     df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
     got = [r.c for r in

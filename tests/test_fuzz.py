@@ -133,6 +133,17 @@ def test_vectorized_equals_oracle_on_fuzz(rows):
         assert dict(g["metadata"]) == want["metadata"], (text, tool)
 
 
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.one_of(_page_payload, _text, st.none()), min_size=1, max_size=8))
+def test_degraded_routing_equals_parse_payload_failures_on_fuzz(payloads):
+    """Over-routing guard under fuzz: the page rows the vectorized core
+    sends to the oracle are exactly those ``parse_payload`` rejects."""
+    from tests.test_vectorized_core import _tokenize_routes
+
+    routed, rejected = _tokenize_routes(payloads)
+    assert routed == rejected, payloads
+
+
 # --- repetition counters (corpus/textstats.py) ---------------------------
 
 _word = st.text(alphabet=st.sampled_from(list("abcxyz")), min_size=1, max_size=3)

@@ -47,6 +47,8 @@ EMB_GATES = [
     "ann_topk_cosine", "centroid_by_label", "embedding_cosine_dups",
 ]
 
+LINK_GATES = ["url_canonicalize", "domain_stats", "blocklist_filter"]
+
 LANGS = ["en", "de", "fr", "es", "zz", None]
 
 
@@ -107,18 +109,46 @@ def hostile_sf_dir(spark, tmp_path_factory):
     return d
 
 
+# (conv_id, href) pairs: an `&` in a path with and without a query,
+# leading utm params with and without followers, a `?` inside a utm value
+_HOSTILE_HREFS = [
+    ("l0", "http://h.com/a&b"),
+    ("l1", "http://h.com/a&b?utm_x=1&c=2"),
+    ("l2", "https://ads.io/p&q?utm_s=1"),
+    ("l3", "HTTPS://Example.CO.UK/p?utm_a=1&utm_b=2&x=3#frag"),
+    ("l4", "http://news.example.com/a?id=1&utm_b=2&y"),
+    ("l5", "http://h.com/?utm_a=1?utm_b=2&c"),
+    ("l6", "http://h.com/p?a=1?utm_b=2&c=3"),
+]
+
+
+def _hostile_transcripts():
+    rows = [(conv, 0, "assistant", f'<p>see <a href="{h}">link {conv}</a></p>',
+             "html/v1") for conv, h in _HOSTILE_HREFS]
+    rows += [
+        ("lnull", 0, "assistant", None, "html/v1"),   # null text passes
+        ("lempty", 0, "assistant", "", "html/v1"),
+        ("lnolink", 0, "assistant", "<p>no links</p>", "html/v1"),
+        ("lpage", 0, "assistant", '<a href="http://ads.io/x">x</a>', "page/v1"),
+    ]
+    return rows
+
+
 def _run_suite(spark, sf_dir, names):
+    """Compare each named gate with its oracle; returns the Spark frames."""
     import __spark_entry__ as E
     from tools.check_correctness import canon_frame, value_hash
 
     con = duckdb.connect()
     for t in ("documents", "embeddings"):
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet/*.parquet')")
+        if os.path.isdir(f"{sf_dir}/{t}.parquet"):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{sf_dir}/{t}.parquet/*.parquet')")
     qs, oracles = E.queries(), E.oracle_sql()
     failures = []
+    frames = {}
     for name in names:
-        got = qs[name](spark, sf_dir).toPandas()
+        got = frames[name] = qs[name](spark, sf_dir).toPandas()
         want = con.sql(oracles[name]).df()
         if len(got) != len(want):
             failures.append((name, f"rows {len(got)} != {len(want)}"))
@@ -130,6 +160,7 @@ def _run_suite(spark, sf_dir, names):
             diff = a.compare(b) if a.shape == b.shape else "shape"
             failures.append((name, f"value mismatch: {str(diff)[:300]}"))
     assert not failures, "\n".join(f"{n}: {m}" for n, m in failures)
+    return frames
 
 
 def test_document_gates_on_hostile_corpus(spark, hostile_sf_dir):
@@ -138,3 +169,32 @@ def test_document_gates_on_hostile_corpus(spark, hostile_sf_dir):
 
 def test_embedding_gates_on_hostile_corpus(spark, hostile_sf_dir):
     _run_suite(spark, hostile_sf_dir, EMB_GATES)
+
+
+def test_link_gates_on_hostile_transcripts(spark, tmp_path, monkeypatch):
+    """The link gates over hostile transcripts, both engines reading the
+    same table: an `&` in a URL path is not a query, and a turn whose
+    text is NULL passes the blocklist."""
+    import __spark_entry__ as E
+
+    path = str(tmp_path / "transcripts_ds")
+    spark.createDataFrame(
+        _hostile_transcripts(),
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).repartition(2).write.parquet(path)
+    monkeypatch.setattr(E, "transcripts_path", lambda sf, *a, **k: path)
+    got = _run_suite(spark, str(tmp_path / "sf0.01"), LINK_GATES)
+
+    canon = dict(zip(got["url_canonicalize"]["conv_id"],
+                     got["url_canonicalize"]["url_canon"]))
+    assert canon == {
+        "l0": "http://h.com/a&b",
+        "l1": "http://h.com/a&b?c=2",
+        "l2": "https://ads.io/p&q",
+        "l3": "https://example.co.uk/p?x=3",
+        "l4": "http://news.example.com/a?id=1&y",
+        "l5": "http://h.com/?c",
+        "l6": "http://h.com/p?a=1&c=3",
+    }
+    kept = set(got["blocklist_filter"]["conv_id"])
+    assert kept == {"l0", "l1", "l4", "l5", "l6", "lnull", "lempty", "lnolink"}

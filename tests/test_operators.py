@@ -196,13 +196,13 @@ def test_span_batches_all_or_nothing(monkeypatch):
     partially emitted (per-turn all-or-nothing degrade, D1 semantics)."""
     import pdf_parser_spark.operators.spans as spans_mod
 
-    def fake_strip(text):
+    def fake_spans(text):
         if text == "bad":
             # second span is malformed -> unpack raises mid-turn
-            return {"left_column": "abcdef", "spans": [(0, 3), (3,)]}
-        return {"left_column": "abcdef", "spans": [(0, 3), (3, 6)]}
+            return [(0, 3, "m0"), (3,)]
+        return [(0, 3, "m0"), (3, 6, "m1")]
 
-    monkeypatch.setattr(spans_mod, "strip_boilerplate", fake_strip)
+    monkeypatch.setattr(spans_mod, "content_spans", fake_spans)
     pdf = pd.DataFrame({
         "conv_id": ["c1", "c2"],
         "turn_idx": [0, 1],
